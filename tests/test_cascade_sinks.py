@@ -93,6 +93,28 @@ def test_write_qa_outputs_envelope(spark, tmp_path):
     assert by_task["object_count"]["dataset"] == "fixture"
     assert by_task["object_count"]["total_questions"] > 0
     assert "generated_date" in by_task["object_3d_size"]
+    on_disk = {r.task: r["count"] for r in back.groupBy("task").count().collect()}
+    assert {t: e["total_questions"] for t, e in by_task.items()} == on_disk
+
+
+def test_write_qa_outputs_empty_union(spark, tmp_path):
+    """Frames with no boxes give an empty union: no task=<t> directory is
+    written, and the sink still succeeds with zero envelopes."""
+    frames = fixture_frames(spark)
+    for col in ("bounding_boxes_3d", "bounding_boxes_2d"):
+        frames = frames.withColumn(col, F.filter(col, lambda b: F.lit(False)))
+    out = str(tmp_path / "qa")
+    write_qa_outputs(generate_all(frames), out, dataset="fixture")
+
+    assert not list((tmp_path / "qa" / "pairs").glob("task=*"))
+    assert (tmp_path / "qa" / "envelopes").is_dir()
+    envs = [
+        line
+        for f in (tmp_path / "qa" / "envelopes").glob("*.json")
+        for line in Path(f).read_text().splitlines()
+        if line.strip()
+    ]
+    assert envs == []
 
 
 def _hier_classifier(table):

@@ -77,6 +77,42 @@ def test_obj_obj_distance_filters_and_value(frames):
     assert "f4" not in by_img
 
 
+def test_obj_obj_distance_rounding_tie_is_platform_stable(spark, monkeypatch):
+    """A distance on a 1-decimal tie answers the same whichever side of
+    it the platform's trig lands: one ulp below 3.35 and one ulp above
+    both answer 3.4, in Spark and in the DuckDB oracle's expression,
+    because both round the 6-dp-quantized distance."""
+    import math
+    import re
+
+    import duckdb
+
+    from vlm_data_pipeline_spark.plans.star_queries_domain import (
+        _QA_OBJDIST_ORACLE,
+    )
+
+    lo, hi = math.nextafter(3.35, 0.0), math.nextafter(3.35, 4.0)
+    dists = spark.createDataFrame(
+        [("d", f"img{i}", "s", "f", 0, 1, "chair", "table", d)
+         for i, d in enumerate((lo, hi))],
+        tasks3d._PAIRDIST_SCHEMA,
+    )
+    monkeypatch.delenv("SPARK_GRAFT_OBJOBJ_KERNEL", raising=False)
+    monkeypatch.setattr(tasks3d, "_box_pair_distances", lambda *a, **k: dists)
+    rows = tasks3d.obj_obj_distance(dists).collect()
+    assert sorted(r.answer for r in rows) == ["3.4", "3.4"]
+    assert {r.metadata["distance_meters"] for r in rows} == {"3.4"}
+
+    answer = re.search(
+        r"cast\((.*?) AS VARCHAR\) AS answer", _QA_OBJDIST_ORACLE
+    ).group(1)
+    got = duckdb.sql(
+        f"SELECT cast({answer} AS VARCHAR) FROM "
+        f"(VALUES ({lo!r}), ({hi!r})) p(dist_m)"
+    ).fetchall()
+    assert sorted(r[0] for r in got) == ["3.4", "3.4"]
+
+
 def test_box_pairs_max_boxes_bound(spark, frames):
     """J8 pair bound (SURVEY §7.3; VERDICT r12 #2): a pathological
     heavy frame must not materialize an n² in-row pair array. With

@@ -46,10 +46,15 @@ def test_live_driver_jvm_has_no_huge_method_flag(spark):
 def test_huge_method_limit_default_is_spark_default(spark):
     """The WSCG bytecode ceiling stays at Spark's default: the
     per-operator-fallback alternative measured 2x slower steady-state
-    (r13 ledger section 8) — the env knob exists for JIT-constrained
-    deployments, but the default must not drift. (Skipped when the env
-    knob itself is set: then the session reflects the deployment, not
-    the default — ADVICE r13.)"""
-    if os.environ.get("SPARK_GRAFT_HUGE_METHOD_LIMIT"):
-        pytest.skip("SPARK_GRAFT_HUGE_METHOD_LIMIT set by deployment")
+    (r13 ledger section 8), so the default must not drift."""
     assert spark.conf.get("spark.sql.codegen.hugeMethodLimit") == "65535"
+
+
+def test_dataframe_call_site_capture_off(spark):
+    """Column-method call-site capture costs ~4 py4j round trips per
+    call while plans are built; the session turns it off at build time,
+    which is when PySpark reads and caches the flag."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False

@@ -925,7 +925,7 @@ SELECT
             || 'ord_' || okey || chr(31) || pos_a || chr(31) || pos_b) AS id,
     'What is the distance between the ' || ca.cat || ' and the ' || cb.cat
         || ' in meters?' AS question,
-    cast(round(p.dist_m, 1) AS VARCHAR) AS answer,
+    cast(round(round(p.dist_m, 6), 1) AS VARCHAR) AS answer,
     'numerical' AS answer_type
 FROM pairdist p
 JOIN ordered ca ON ca.l_orderkey = p.okey AND ca.pos = p.pos_a

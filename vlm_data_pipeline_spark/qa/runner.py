@@ -205,12 +205,23 @@ def write_qa_outputs(all_qa: DataFrame, path: str, dataset: str = "all") -> None
       union is just the unpartitioned read);
     - ``<path>/envelopes/``: one small JSON row per task with the envelope
       metadata (counts + generated_date), the summary.json analogue.
+
+    The envelopes are counted from the pairs just written (one JSON line
+    per pair), so ``total_questions`` is the number of rows on disk and
+    ``all_qa`` is executed only once.
     """
     all_qa.write.mode("overwrite").partitionBy("task").json(f"{path}/pairs")
+    written = all_qa.sparkSession.read.text(f"{path}/pairs")
+    if "task" in written.columns:
+        counts = written.groupBy("task").agg(F.count("*").alias("total_questions"))
+    else:
+        # an empty union writes no task=<t> directory, so the read-back
+        # has no partition column: zero envelopes
+        counts = all_qa.sparkSession.createDataFrame(
+            [], "task string, total_questions bigint"
+        )
     (
-        all_qa.groupBy("task")
-        .agg(F.count("*").alias("total_questions"))
-        .select(
+        counts.select(
             F.lit(dataset).alias("dataset"),
             F.col("task").alias("task_type"),
             "total_questions",

@@ -579,13 +579,15 @@ def obj_obj_distance(
     ``max_boxes`` bounds the per-frame pair expansion (see _box_pairs);
     default None = exact reference parity.
 
-    The distance band is applied to the distance QUANTIZED to 6 dp, not
-    the raw double: the raw value depends on the platform's last-ulp
-    sin/cos behavior, so a pair sitting exactly on the band edge would
-    make the output row-set hardware/library-dependent — the same
-    reproducibility rule detrandom applies to draws, applied to float
-    predicates (observed live: one exactly-0.2 pair flips between JVM
-    and DuckDB trig)."""
+    The distance band AND the 1-decimal answer are taken from the
+    distance QUANTIZED to 6 dp, not the raw double: the raw value depends
+    on the platform's last-ulp sin/cos behavior, so a pair sitting
+    exactly on the band edge or on a rounding tie would make the output
+    hardware/library-dependent — the same reproducibility rule detrandom
+    applies to draws, applied to float predicates and roundings (observed
+    live: one exactly-0.2 pair flips between JVM and DuckDB trig, and a
+    3.35 tie computed as 3.3500000000000005 by DuckDB rounds to 3.4
+    where the JVM value rounds to 3.3)."""
     band = F.round(F.col("dist_m"), 6)
     # Kernel selection (round 14). Default: the per-frame Arrow kernel
     # (_box_pair_distances) — the only shape measured fast at sf1/sf10
@@ -614,7 +616,7 @@ def obj_obj_distance(
         dists.filter(
             (band >= P_OBJ["min_distance"]) & (band <= P_OBJ["max_distance"])
         )
-        .withColumn("dist_r", F.round("dist_m", P_OBJ["decimals"]))
+        .withColumn("dist_r", F.round(band, P_OBJ["decimals"]))
     )
     md = meta(
         image_id=F.col("image_id"),

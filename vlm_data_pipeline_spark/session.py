@@ -95,15 +95,15 @@ def get_spark(
         # refuses by default; read as long and convert at the source wrapper
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # Align Spark's whole-stage-codegen bytecode ceiling with
-        # HotSpot's huge-method JIT limit (the config's documented
-        # purpose): a WSCG method over this size falls back to
-        # per-operator codegen, whose expression splitter emits small
-        # JIT-able methods. Parameterized for A/B; see ledger §8.
-        .config(
-            "spark.sql.codegen.hugeMethodLimit",
-            os.environ.get("SPARK_GRAFT_HUGE_METHOD_LIMIT", "65535"),
-        )
+        # PySpark's DataFrame call-site capture wraps every Column method:
+        # each call walks the Python stack and adds about four py4j round
+        # trips (origin set/clear, a conf read, a JVM lookup). Building
+        # generate_all's branches costs 20.1K round trips with it on and
+        # 7.7K with it off, at 140-190 us each on a 4-core host. Off, only
+        # the Python call-site text leaves analysis error messages.
+        # PySpark caches the flag per process from the first active
+        # session, so it has to be set here, at session build.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k in WORKER_ALLOC_ENV:
         builder = builder.config(f"spark.executorEnv.{k}", os.environ[k])
