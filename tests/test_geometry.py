@@ -74,62 +74,9 @@ def test_box_vertices_match_numpy(box_df):
         assert np.allclose(actual, expected, atol=1e-12), row.i
 
 
-def test_min_vertex_distance_arrow_bit_parity(spark):
-    """The Arrow kernel must equal the Column fold BIT-FOR-BIT — same
-    subtraction/multiply/add association, min, one final sqrt — on
-    randomized oriented box pairs. The FOLD is the shipped path inside
-    qa_task_obj_obj_distance (it wins at pipeline level — tasks3d.py);
-    the Arrow kernel is the standalone-scan sibling whose parity this
-    test pins."""
-    rng = np.random.default_rng(42)
-
-    def b():
-        geom = dict(zip(
-            ["x", "y", "z", "xl", "yl", "zl", "pitch", "yaw", "roll"],
-            [
-                float(rng.uniform(-5, 5)), float(rng.uniform(-5, 5)),
-                float(rng.uniform(0.5, 8)), float(rng.uniform(0.1, 3)),
-                float(rng.uniform(0.1, 3)), float(rng.uniform(0.1, 3)),
-                float(rng.uniform(-1.5, 1.5)), float(rng.uniform(-3.1, 3.1)),
-                float(rng.uniform(-1.5, 1.5)),
-            ],
-        ))
-        return geom | {"category": "c", "label_id": None, "object_id": None,
-                       "confidence": None, "method": None}
-
-    rows = [{"i": i, "ba": b(), "bb": b()} for i in range(500)]
-    from pyspark.sql import types as T
-
-    from vlm_data_pipeline_spark.schemas import BBOX_3D
-
-    schema = T.StructType([
-        T.StructField("i", T.IntegerType()),
-        T.StructField("ba", BBOX_3D),
-        T.StructField("bb", BBOX_3D),
-    ])
-    df = spark.createDataFrame(rows, schema).select(
-        "i",
-        G.box_vertices(F.col("ba")).alias("va"),
-        G.box_vertices(F.col("bb")).alias("vb"),
-    )
-    out = df.select(
-        "i",
-        G.min_vertex_distance(F.col("va"), F.col("vb")).alias("fold"),
-        G.min_vertex_distance_arrow(F.col("va"), F.col("vb")).alias("arrow"),
-        G.min_vertex_distance_codegen(F.col("va"), F.col("vb")).alias("unr"),
-    ).collect()
-    assert len(out) == 500
-    for r in out:
-        assert r.fold == r.arrow, (r.i, r.fold, r.arrow)  # exact, not approx
-        # the unrolled codegen kernel (the shipped obj_obj_distance path,
-        # round 13) computes the identical 64 squared distances + one
-        # least + one sqrt — bit-equal to the fold, not approximately
-        assert r.fold == r.unr, (r.i, r.fold, r.unr)
-
-
 def test_box_vertices_flat_hof_bit_parity(spark):
-    """box_vertices_flat_hof (the let-bound flat-24 form shipped inside
-    the _box_pairs HOF lambda, round 13) must equal the box_vertices
+    """box_vertices_flat_hof (the let-bound flat-24 form the obj_obj
+    pair stage computes inside a transform lambda) must equal the box_vertices
     unroll BIT-FOR-BIT after flattening: the same multiplies and adds in
     the same association on the same doubles, only factored through
     lambda variables so an interpreted evaluation computes each trig
@@ -177,58 +124,9 @@ def test_box_vertices_flat_hof_bit_parity(spark):
     assert len(out) == 300
     for r in out:
         # flat24 = the same 24 doubles, row-major flattened (the
-        # _box_pairs pair-payload layout, round 13)
+        # Arrow pair kernel's per-box payload layout)
         flattened = [c for v in r.flat for c in v]
         assert flattened == r.flat24, r.i
-
-
-def test_min_vertex_distance_flat_bit_parity(spark):
-    """min_vertex_distance_flat over box_vertices_flat_hof (the shipped
-    obj_obj_distance path, round 13) must equal the nested codegen
-    kernel over box_vertices BIT-FOR-BIT on random oriented pairs: the
-    same 64 squared-distance terms on the same doubles, only indexed
-    v[3i+c] instead of v[i][c]."""
-    rng = np.random.default_rng(77)
-
-    def b():
-        geom = dict(zip(
-            ["x", "y", "z", "xl", "yl", "zl", "pitch", "yaw", "roll"],
-            [
-                float(rng.uniform(-5, 5)), float(rng.uniform(-5, 5)),
-                float(rng.uniform(0.5, 8)), float(rng.uniform(0.1, 3)),
-                float(rng.uniform(0.1, 3)), float(rng.uniform(0.1, 3)),
-                float(rng.uniform(-1.5, 1.5)), float(rng.uniform(-3.1, 3.1)),
-                float(rng.uniform(-1.5, 1.5)),
-            ],
-        ))
-        return geom | {"category": "c", "label_id": None, "object_id": None,
-                       "confidence": None, "method": None}
-
-    rows = [{"i": i, "ba": b(), "bb": b()} for i in range(500)]
-    from pyspark.sql import types as T
-
-    from vlm_data_pipeline_spark.schemas import BBOX_3D
-
-    schema = T.StructType([
-        T.StructField("i", T.IntegerType()),
-        T.StructField("ba", BBOX_3D),
-        T.StructField("bb", BBOX_3D),
-    ])
-    df = spark.createDataFrame(rows, schema).select(
-        "i",
-        G.box_vertices(F.col("ba")).alias("va"),
-        G.box_vertices(F.col("bb")).alias("vb"),
-        G.box_vertices_flat_hof(F.col("ba")).alias("fa"),
-        G.box_vertices_flat_hof(F.col("bb")).alias("fb"),
-    )
-    out = df.select(
-        "i",
-        G.min_vertex_distance_codegen(F.col("va"), F.col("vb")).alias("unr"),
-        G.min_vertex_distance_flat(F.col("fa"), F.col("fb")).alias("flat"),
-    ).collect()
-    assert len(out) == 500
-    for r in out:
-        assert r.unr == r.flat, (r.i, r.unr, r.flat)  # exact equality
 
 
 def test_min_vertex_distance_analytic(box_df):
@@ -388,10 +286,11 @@ def test_strict_relations(spark):
     assert r.rel.vertical_rel is None
 
 
-def test_min_vertex_distance_arrow_null_propagation(spark):
-    """ADVICE r7: NULL verts arrays must yield NULL from the Arrow
-    kernel — the same propagation as the Column fold — not crash
-    np.stack inside the pandas_udf."""
+def test_min_vertex_distance_null_propagation(spark):
+    """The fold's NULL contract, which the Arrow pair kernel's NULL
+    handling is read against: NULL va -> NULL; NULL vb alone -> inf
+    (``least`` skips the inner NULL aggregate, leaving the +inf seed);
+    both NULL -> NULL."""
     df = spark.createDataFrame(
         [
             (0, [[0.0, 0.0, 0.0]] * 8, [[1.0, 0.0, 0.0]] * 8),
@@ -403,19 +302,12 @@ def test_min_vertex_distance_arrow_null_propagation(spark):
     )
     out = (
         df.select(
-            "i",
-            G.min_vertex_distance(F.col("va"), F.col("vb")).alias("fold"),
-            G.min_vertex_distance_arrow(F.col("va"), F.col("vb")).alias(
-                "kern"
-            ),
+            "i", G.min_vertex_distance(F.col("va"), F.col("vb")).alias("d")
         )
         .orderBy("i")
         .collect()
     )
-    assert out[0].fold == out[0].kern == 1.0
-    # The fold's null semantics are ASYMMETRIC and the kernel must mirror
-    # them: NULL va -> NULL; NULL vb alone -> inf (F.least skips the
-    # inner NULL aggregate, leaving the +inf seed).
-    assert out[1].fold is None and out[1].kern is None, out[1]
-    assert out[2].fold == float("inf") and out[2].kern == float("inf"), out[2]
-    assert out[3].fold is None and out[3].kern is None, out[3]
+    assert out[0].d == 1.0
+    assert out[1].d is None, out[1]
+    assert out[2].d == float("inf"), out[2]
+    assert out[3].d is None, out[3]

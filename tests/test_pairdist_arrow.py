@@ -1,16 +1,14 @@
-"""Round-14 obj_obj pair-distance kernels: the per-frame Arrow kernel
-(`_box_pair_distances`, the shipped default) and the flat HOF fold
-(`min_vertex_distance_flat_fold`, the Python-less escape hatch) must be
-VALUE-IDENTICAL to the round-13 unrolled codegen path on every pair —
-exact doubles, not approximate. The Arrow kernel consumes the identical
-JVM-computed vertex doubles (trig never moves to Python), so parity is
-bit-exact by construction; these tests pin it.
+"""The obj_obj pair-distance kernel (`_box_pair_distances`, a per-frame
+Arrow kernel) must be VALUE-IDENTICAL to the Column reference
+`geometry.min_vertex_distance` over `box_vertices` on the `_box_pairs`
+pairs — exact doubles, not approximate. The Arrow kernel consumes the
+identical JVM-computed vertex doubles (trig never moves to Python), so
+parity is bit-exact by construction; these tests pin it.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -80,7 +78,7 @@ def _frames(spark, rng, counts):
 
 
 def _old_path(frames, max_boxes=None):
-    pairs = _box_pairs(frames, with_verts=True, max_boxes=max_boxes)
+    pairs = _box_pairs(frames, max_boxes=max_boxes)
     return pairs.select(
         "dataset",
         "image_id",
@@ -88,10 +86,10 @@ def _old_path(frames, max_boxes=None):
         "frame_id",
         "pos_a",
         "pos_b",
-        "cat_a",
-        "cat_b",
-        G.min_vertex_distance_flat(
-            F.col("verts_a"), F.col("verts_b")
+        F.col("box_a.category").alias("cat_a"),
+        F.col("box_b.category").alias("cat_b"),
+        G.min_vertex_distance(
+            G.box_vertices(F.col("box_a")), G.box_vertices(F.col("box_b"))
         ).alias("dist_m"),
     )
 
@@ -115,8 +113,8 @@ def _rowset(df):
 
 def test_pairdist_arrow_bit_parity(spark):
     """Mixed frame sizes (0, 1, 2, 3, 7, 23 boxes, one NULL array): the
-    Arrow kernel's rows equal the row-space unrolled kernel's rows
-    EXACTLY — same pairs, same categories, bit-equal distances."""
+    Arrow kernel's rows equal the row-space fold's rows EXACTLY — same
+    pairs, same categories, bit-equal distances."""
     rng = np.random.default_rng(4242)
     frames = _frames(spark, rng, [0, 1, 2, 3, 7, 23, None, 5, 2])
     old = _rowset(_old_path(frames))
@@ -136,45 +134,10 @@ def test_pairdist_arrow_bit_parity_capped(spark):
     assert new == old
 
 
-def test_pairdist_flat_fold_bit_parity(spark):
-    """The flat HOF fold kernel (env escape hatch) equals the unrolled
-    flat kernel bit-for-bit on random oriented pairs."""
-    rng = np.random.default_rng(99)
-    rows = [
-        {"i": i, "ba": _rand_box(rng), "bb": _rand_box(rng)}
-        for i in range(500)
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("i", T.IntegerType()),
-            T.StructField("ba", BBOX_3D),
-            T.StructField("bb", BBOX_3D),
-        ]
-    )
-    df = spark.createDataFrame(rows, schema).select(
-        "i",
-        G.box_vertices_flat_hof(F.col("ba")).alias("fa"),
-        G.box_vertices_flat_hof(F.col("bb")).alias("fb"),
-    )
-    out = df.select(
-        "i",
-        G.min_vertex_distance_flat(F.col("fa"), F.col("fb")).alias("unr"),
-        G.min_vertex_distance_flat_fold(F.col("fa"), F.col("fb")).alias(
-            "fold"
-        ),
-    ).collect()
-    assert len(out) == 500
-    for r in out:
-        assert r.unr == r.fold, (r.i, r.unr, r.fold)
-
-
 def test_pairdist_arrow_null_verts_vanish_in_task(spark):
-    """A box with a NULL angle nulls all its vertices: the JVM kernel
-    yields NULL dist, the Arrow kernel NaN — both must vanish from the
-    obj_obj_distance output (the band predicate rejects non-finite and
-    NULL alike), leaving the two task outputs identical."""
-    import os
-
+    """A box with a NULL angle nulls all its vertices: the Arrow kernel
+    gives NULL (not NaN) dist_m for both pairs touching it, as the fold
+    does, and the band predicate drops them from obj_obj_distance."""
     from vlm_data_pipeline_spark.qa import tasks3d
 
     rng = np.random.default_rng(5)
@@ -195,24 +158,25 @@ def test_pairdist_arrow_null_verts_vanish_in_task(spark):
     ]
     frames = spark.createDataFrame(rows, FRAME_SCHEMA)
 
-    def run(kernel):
-        os.environ["SPARK_GRAFT_OBJOBJ_KERNEL"] = kernel
-        try:
-            out = tasks3d.obj_obj_distance(frames)
-            return sorted(
-                (r.id, r.question, r.answer, r.answer_type)
-                for r in out.collect()
-            )
-        finally:
-            os.environ.pop("SPARK_GRAFT_OBJOBJ_KERNEL", None)
+    broken = (
+        _box_pair_distances(frames)
+        .filter("cat_a = 'broken' OR cat_b = 'broken'")
+        .select("pos_a", "pos_b", F.col("dist_m").isNull().alias("is_null"))
+        .orderBy("pos_a", "pos_b")
+        .collect()
+    )
+    assert [(r.pos_a, r.pos_b, r.is_null) for r in broken] == [
+        (0, 1, True),
+        (1, 2, True),
+    ]
 
-    arrow_rows = run("arrow")
-    flat_rows = run("flat")
-    assert arrow_rows == flat_rows
-    # exactly the one valid pair survives; pairs touching the broken box
-    # are rejected by the band in both kernels
-    assert len(arrow_rows) == 1
-    assert "the a and the b" in arrow_rows[0][1]
+    out = sorted(
+        (r.id, r.question, r.answer, r.answer_type)
+        for r in tasks3d.obj_obj_distance(frames).collect()
+    )
+    # exactly the one valid pair survives
+    assert len(out) == 1
+    assert "the a and the b" in out[0][1]
 
 
 def test_pairdist_arrow_partial_null_term_skip():

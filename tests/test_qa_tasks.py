@@ -97,7 +97,6 @@ def test_obj_obj_distance_rounding_tie_is_platform_stable(spark, monkeypatch):
          for i, d in enumerate((lo, hi))],
         tasks3d._PAIRDIST_SCHEMA,
     )
-    monkeypatch.delenv("SPARK_GRAFT_OBJOBJ_KERNEL", raising=False)
     monkeypatch.setattr(tasks3d, "_box_pair_distances", lambda *a, **k: dists)
     rows = tasks3d.obj_obj_distance(dists).collect()
     assert sorted(r.answer for r in rows) == ["3.4", "3.4"]
@@ -207,47 +206,6 @@ def test_generate_all_and_summary(frames):
     summary = {r.task: r.n_questions for r in qa_summary(all_qa).collect()}
     assert set(summary) == set(TASKS)
     assert all(n > 0 for n in summary.values())
-
-
-def test_generate_all_summary_tier0_precheck(spark, frames):
-    """VERDICT r12 #3 / Next #5: passing the K2 dataset summary makes the
-    modality precheck a bounded read of the summary table — output
-    identical to the probe path, and PROVABLY consulted: a summary
-    claiming a modality is absent drops that branch without any frames
-    probe overriding it (the lying-summary witness)."""
-    from vlm_data_pipeline_spark.sources.json_frames import dataset_summary
-
-    base = sorted(
-        (r.id, r.task, r.answer) for r in generate_all(frames).collect()
-    )
-    with_summary = sorted(
-        (r.id, r.task, r.answer)
-        for r in generate_all(
-            frames, summary=dataset_summary(frames)
-        ).collect()
-    )
-    assert base == with_summary
-    # lying summary: no 3D boxes claimed → every 3D task dropped, 2D kept
-    lie = spark.createDataFrame(
-        [("ALL", "ALL", 10, 0, 5, 1)],
-        "dataset string, split string, n_frames long, n_boxes_3d long,"
-        " n_boxes_2d long, n_scenes long",
-    )
-    tasks_left = {
-        r.task for r in generate_all(frames, summary=lie).collect()
-    }
-    from vlm_data_pipeline_spark.qa.runner import TASKS_3D
-
-    assert tasks_left and tasks_left.isdisjoint(TASKS_3D)
-    # leaf-row fallback (no grand rollup row present)
-    leaves = dataset_summary(frames).filter(
-        (F.col("dataset") != "ALL") & (F.col("split") != "ALL")
-    )
-    with_leaves = sorted(
-        (r.id, r.task, r.answer)
-        for r in generate_all(frames, summary=leaves).collect()
-    )
-    assert base == with_leaves
 
 
 def test_determinism(frames):

@@ -116,31 +116,29 @@ def box_vertices_flat_hof(box: Column) -> Column:
     (``transform(boxes, b -> ...)``), emitting a FLAT ``array<double>``
     of 24 (x0,y0,z0,x1,y1,z1,...) instead of the nested 8×3 shape.
 
-    Two differences from the row-space unroll, both aimed at the pair
-    stage where each box's vertex array is copied into every pair struct
-    the in-row comprehension materializes (~n/2 copies per box):
+    It feeds the per-box vertex payload of the obj_obj pair stage
+    (``qa.tasks3d._slim_verts_payload``), and differs from the row-space
+    unroll in two ways:
 
     - the 6 trig values and 9 rotation entries are let-bound (lambda
-      variables evaluate ONCE at binding) — HOF lambdas run interpreted
+      variables evaluate ONCE at binding). HOF lambdas run interpreted
       with no codegen CSE, so the flat unroll would re-evaluate ~290
       SIN/COS per box here;
     - one array header + one primitive buffer per box instead of nine
-      array objects — the allocation shape is what dominates the copied
-      payload: flat verts measured 14.0→11.2 s min-of-4 interleaved on
-      the 11.9M-pair sf1 stage vs the nested form (round 13).
+      array objects, and a layout the Arrow pair kernel reshapes to
+      (n, 8, 3) without a per-vertex list.
 
     The i-th vertex's coordinates are the IDENTICAL doubles
-    ``box_vertices(box)[i][0..2]`` — same multiplies/adds in the same
+    ``box_vertices(box)[i][0..2]``: the same multiplies/adds in the same
     association, only factored through lambda variables (pinned in
-    test_box_vertices_flat_hof_bit_parity). Pair with
-    :func:`min_vertex_distance_flat`.
+    test_box_vertices_flat_hof_bit_parity). That is what lets
+    :func:`min_vertex_distance` over :func:`box_vertices` serve as the
+    bit-exact reference for the pair kernel.
 
     Keep using :func:`box_vertices` in ROW space (projections, the
     cam_obj_rel_dist per-box transform), where whole-stage codegen CSEs
-    the duplicates natively — measured at sf1: a let-bound variant is
-    ~10% SLOWER in cam_obj_rel_dist's one-array-per-box lambda, where
-    nothing copies the payload and the extra nested HOF layers cost
-    more than the repeated trig (round 13).
+    the duplicates natively; there the extra nested HOF layers of a
+    let-bound form cost more than the repeated trig.
     """
     p, yw, r = box["pitch"], box["yaw"], box["roll"]
 
@@ -180,25 +178,27 @@ def box_vertices_flat_hof(box: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _pair_dist(v1: Column, v2: Column) -> Column:
-    return F.sqrt(_pair_sqdist(v1, v2))
-
-
 def _pair_sqdist(v1: Column, v2: Column) -> Column:
     dx, dy, dz = v1[0] - v2[0], v1[1] - v2[1], v1[2] - v2[2]
     return dx * dx + dy * dy + dz * dz
 
 
 def min_vertex_distance(verts_a: Column, verts_b: Column) -> Column:
-    """Min Euclidean distance over the 8×8 vertex pairs of two boxes.
+    """Min Euclidean distance over the 8×8 vertex pairs of two boxes
+    (reference geometry.py:98-118).
 
-    Runs as a fold over SQUARED distances (sqrt is monotone, so one final
-    sqrt replaces 64, and the nested ``aggregate`` keeps a scalar
-    accumulator instead of materializing a 64-element array per pair —
-    this expression runs once per candidate pair, i.e. millions of times).
-    ``verts_b`` is let-bound: it is referenced inside the per-vertex lambda
-    and would otherwise re-evaluate its (8-corner trig) expression for every
-    vertex of ``verts_a``."""
+    The Column reference for the obj_obj pair-distance kernel
+    (``qa.tasks3d._box_pair_distances``): the same 64
+    ``dx*dx + dy*dy + dz*dz`` terms in the same association, an exact
+    min, one final sqrt, so the two agree bit for bit on the same
+    vertex doubles. Runs as a fold over SQUARED distances with a scalar
+    accumulator. ``verts_b`` is let-bound so its producing expression
+    evaluates once, not once per vertex of ``verts_a``.
+
+    NULLs: NULL ``verts_a`` gives NULL; NULL ``verts_b`` alone gives
+    Infinity (the inner aggregate is NULL and ``least`` skips it,
+    leaving the +inf seed); a NULL term inside a vertex is skipped by
+    ``least``."""
     inf = F.lit(float("inf"))
     return let(
         verts_b,
@@ -217,185 +217,6 @@ def min_vertex_distance(verts_a: Column, verts_b: Column) -> Column:
             )
         ),
     )
-
-
-def min_vertex_distance_codegen(verts_a: Column, verts_b: Column) -> Column:
-    """Unrolled sibling of :func:`min_vertex_distance`: the SAME 64
-    squared-distance expressions (dx*dx + dy*dy + dz*dz, left-associated),
-    one n-ary ``least``, one final sqrt — but as a flat expression tree
-    with no higher-order function, so it runs through Spark's expression
-    codegen instead of the interpreted HOF evaluator (ArrayAggregate is
-    CodegenFallback: every lambda body is a per-element virtual-dispatch
-    eval). Bit-identical to the fold on non-NULL vertex arrays (pinned in
-    tests/test_geometry.py::test_min_vertex_distance_codegen_bit_parity):
-    min over the identical 64 doubles is exact and association-free.
-
-    Differences from the fold, and why they don't matter where this is
-    used (the obj_obj_distance QA task, whose band filter consumes it):
-
-    - NULL ``verts_b`` with non-NULL ``verts_a`` → the fold returns
-      Infinity (its inner aggregate over a NULL array is NULL, which
-      ``least`` skips, leaving the +inf seed); here every term is NULL so
-      ``least`` — which skips NULLs and returns NULL only when ALL
-      children are — yields NULL. Any finite band predicate rejects both.
-    - Per-element NULLs behave identically: a NULL term is skipped by
-      ``least`` in both forms.
-
-    Callers must pass MATERIALIZED columns (attribute/field references):
-    each input is referenced 64 times, and a non-cheap expression here
-    would be duplicated 64× by CollapseProject.
-
-    CAUTION (round 14): this shape is steady-state-fast ONLY when the
-    JVM compiles its >8000-bytecode generated methods — HotSpot's
-    default refuses, and the `-XX:-DontCompileHugeMethods` rescue taxed
-    the whole round-13 suite 2× (VERDICT r13). obj_obj_distance ships
-    the per-frame Arrow kernel instead (tasks3d._box_pair_distances);
-    this and the _flat sibling remain as parity witnesses and for
-    JIT-flag-tuned deployments (SPARK_GRAFT_OBJOBJ_KERNEL=flat).
-    """
-    return F.sqrt(
-        F.least(
-            *[
-                _pair_sqdist(verts_a[i], verts_b[j])
-                for i in range(8)
-                for j in range(8)
-            ]
-        )
-    )
-
-
-def min_vertex_distance_flat(verts_a: Column, verts_b: Column) -> Column:
-    """:func:`min_vertex_distance_codegen` over FLAT 24-double vertex
-    arrays (:func:`box_vertices_flat_hof` layout): the same 64
-    ``dx*dx + dy*dy + dz*dz`` terms on the same doubles, indexed
-    ``v[3*i + c]`` instead of ``v[i][c]`` — each term reads two
-    primitive-array slots with no intermediate 3-double array header.
-    Value-identical to the codegen kernel on matching vertices (pinned
-    in test_min_vertex_distance_flat_bit_parity); the same NULL-handling
-    notes apply. Same caller contract: pass MATERIALIZED columns only.
-    """
-
-    def sq(i: int, j: int) -> Column:
-        dx = verts_a[3 * i] - verts_b[3 * j]
-        dy = verts_a[3 * i + 1] - verts_b[3 * j + 1]
-        dz = verts_a[3 * i + 2] - verts_b[3 * j + 2]
-        return dx * dx + dy * dy + dz * dz
-
-    return F.sqrt(F.least(*[sq(i, j) for i in range(8) for j in range(8)]))
-
-
-def min_vertex_distance_flat_fold(verts_a: Column, verts_b: Column) -> Column:
-    """:func:`min_vertex_distance` (the interpreted HOF fold) over FLAT
-    24-double vertex arrays (:func:`box_vertices_flat_hof` layout): the
-    same 64 ``dx*dx + dy*dy + dz*dz`` terms on the same doubles as
-    :func:`min_vertex_distance_flat`, folded through two nested
-    ``aggregate`` calls over the base-offset sequence (0,3,...,21)
-    instead of unrolled into one 64-term ``least`` tree.
-
-    Why this shape exists (round 14): the unrolled tree is the fastest
-    *steady-state* kernel but its whole-stage-codegen method exceeds
-    HotSpot's ``DontCompileHugeMethods`` limit (8000 bytecode bytes), so
-    it only performs when the JVM is told to compile huge methods — a
-    global flag that round 13 measured as a 2× tax on every query
-    sharing the session (VERDICT r13). The fold's lambda bodies are
-    small, JIT-friendly methods: slower per pair, stable across
-    sessions. Value-identical to the unrolled kernel on matching
-    vertices (min over the identical 64 doubles; parity pinned in
-    test_min_vertex_distance_flat_fold_bit_parity) with one NULL-shape
-    difference inherited from :func:`min_vertex_distance`: NULL
-    ``verts_b`` with non-NULL ``verts_a`` folds to Infinity while the
-    unrolled form yields NULL — both rejected by any finite band
-    predicate (same note on the codegen sibling).
-    ``verts_b`` is let-bound so its producing expression evaluates once,
-    not once per outer vertex.
-    """
-    inf = F.lit(float("inf"))
-    base = F.sequence(F.lit(0), F.lit(21), F.lit(3))  # 0,3,...,21
-
-    def sq(va: Column, vb: Column, i: Column, j: Column) -> Column:
-        dx = va[i] - vb[j]
-        dy = va[i + 1] - vb[j + 1]
-        dz = va[i + 2] - vb[j + 2]
-        return dx * dx + dy * dy + dz * dz
-
-    return let(
-        verts_b,
-        lambda vb: F.sqrt(
-            F.aggregate(
-                base,
-                inf,
-                lambda acc, i: F.least(
-                    acc,
-                    F.aggregate(
-                        base,
-                        inf,
-                        lambda acc2, j: F.least(acc2, sq(verts_a, vb, i, j)),
-                    ),
-                ),
-            )
-        ),
-    )
-
-
-def min_vertex_distance_arrow(verts_a: Column, verts_b: Column) -> Column:
-    """Arrow-batched numpy kernel computing EXACTLY
-    :func:`min_vertex_distance` — the hot-path sibling for corpus-scale
-    pair tables (the ``score_corpus`` dual-path precedent).
-
-    The Column fold above interprets ~64 lambda bodies per pair (Spark
-    does not codegen higher-order functions). This kernel runs the
-    identical arithmetic — dx*dx + dy*dy + dz*dz left-associated, min
-    over the 64 pairs, one final sqrt — on (N, 8, 3) float64 batches,
-    BIT-IDENTICAL on all 1.2M sf0.1 pairs (equality pinned in
-    tests/test_geometry.py::test_min_vertex_distance_arrow_bit_parity).
-    Vertices cross as flattened 24-double arrays; Arrow float64
-    transfer is exact. NULL handling mirrors the fold exactly, including
-    its asymmetry: NULL ``verts_a`` → NULL, NULL ``verts_b`` alone →
-    Infinity (pinned in
-    test_min_vertex_distance_arrow_null_propagation).
-
-    WHEN TO USE WHICH (both measured, round 7): on a standalone
-    persisted pair table this kernel is 2.2x faster warm (2.80s →
-    1.26s at 1.2M pairs); inside qa_pipeline_full's ten-task union the
-    FOLD wins (10.8-11.3s vs 11.1-15.2s, 27s cold) — the Python-worker
-    stage break and per-thread worker startup cost more than the
-    interpreted lambdas save when the scan shares a session with nine
-    sibling tasks. Pick by pipeline-level measurement, not operator
-    microbenchmarks; the QA task uses the fold for exactly this
-    reason."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _kern(fa: pd.Series, fb: pd.Series) -> pd.Series:
-        # NULL handling mirrors the fold EXACTLY (it is asymmetric):
-        # NULL verts_a → NULL (the outer `aggregate` over a NULL array
-        # is NULL), but NULL verts_b with non-NULL verts_a → Infinity —
-        # the inner aggregate returns NULL and F.least SKIPS nulls, so
-        # the accumulator stays at its +inf seed. Pinned in
-        # test_min_vertex_distance_arrow_null_propagation.
-        a_ok = fa.notna().values
-        b_ok = fb.notna().values
-        valid = a_ok & b_ok
-        out = pd.array([None] * len(fa), dtype="Float64")
-        out[a_ok & ~b_ok] = float("inf")
-        if valid.any():
-            a = np.stack(fa.values[valid]).reshape(-1, 8, 3)
-            b = np.stack(fb.values[valid]).reshape(-1, 8, 3)
-            d = a[:, :, None, :] - b[:, None, :, :]
-            # sum over the length-3 axis reduces left-to-right:
-            # (dx*dx + dy*dy) + dz*dz — same association as _pair_sqdist
-            sq = (d * d).sum(axis=3)
-            out[valid] = np.sqrt(sq.reshape(-1, 64).min(axis=1))
-        return pd.Series(out)
-
-    # NOTE: this module has `from __future__ import annotations`, so the
-    # kernel's hints are strings that pandas_udf cannot resolve against
-    # module globals (pd is function-local); attach real annotations
-    # before wrapping so eval-type inference sees pd.Series objects.
-    _kern.__annotations__ = {"fa": pd.Series, "fb": pd.Series, "return": pd.Series}
-    kern = pandas_udf(_kern, "double")
-    return kern(F.flatten(verts_a), F.flatten(verts_b))
 
 
 def min_camera_vertex_distance(verts: Column) -> Column:

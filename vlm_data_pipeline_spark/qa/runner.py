@@ -48,7 +48,6 @@ def generate_all(
     frames: DataFrame,
     tasks: list[str] | None = None,
     persist: bool = True,
-    summary: DataFrame | None = None,
 ) -> DataFrame:
     """Union of all task outputs over one frames lineage, with a task
     column (the all_qa_pairs.json analogue, generate_qa.py:134-144).
@@ -60,17 +59,6 @@ def generate_all(
     (measured ~2× end-to-end on the synthetic corpus). At cluster scale
     this is the standard snapshot-then-fan-out pattern; pass False when
     the input is already a cached/bronze table.
-
-    ``summary`` — optional K2 dataset-summary table for THIS frames input
-    (``sources.json_frames.dataset_summary`` output, or a read of the
-    parquet it was written to). When given it becomes tier 0 of the
-    modality precheck: the per-corpus n_boxes_3d / n_boxes_2d counters
-    answer presence/absence at the cost of reading a
-    ≤|datasets×splits|-row table — in particular the NEGATIVE proof,
-    which on an ingested (non-literal-NULL) corpus otherwise pays a full
-    cache build (the documented tier-2 price; VERDICT r12 #3). The
-    caller owns the contract that the summary describes the same frames
-    (the bronze ingest writes both in one pass).
     """
     names = tasks or list(TASKS)
     # Streaming input works UNCHANGED: every task is a zero-shuffle per-row
@@ -118,29 +106,7 @@ def generate_all(
         raw = frames
         frames = frames.persist(StorageLevel.MEMORY_AND_DISK)
 
-        # Tier 0: the K2 bronze summary already holds per-corpus box
-        # counters — both proofs become a bounded read of a tiny table.
-        # Prefer the rollup's grand (ALL, ALL) row; else sum the leaves.
-        box_counts: tuple[int, int] | None = None
-        if summary is not None:
-            srows = summary.select(
-                "dataset", "split", "n_boxes_3d", "n_boxes_2d"
-            ).collect()
-            grand = [
-                r for r in srows if r.dataset == "ALL" and r.split == "ALL"
-            ]
-            use = grand or [
-                r for r in srows if r.dataset != "ALL" and r.split != "ALL"
-            ] or srows
-            box_counts = (
-                sum(r.n_boxes_3d or 0 for r in use),
-                sum(r.n_boxes_2d or 0 for r in use),
-            )
-
         def _has_modality(col: str) -> bool:
-            if box_counts is not None:
-                n3, n2 = box_counts
-                return (n3 if col == "bounding_boxes_3d" else n2) > 0
             # Tier 1 reaches into py4j internals (_jdf / optimizedPlan),
             # which do not exist under Spark Connect and may drift across
             # Spark versions. The probe is a pure optimization, so any

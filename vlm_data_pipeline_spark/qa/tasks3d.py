@@ -232,24 +232,14 @@ def _capped_boxes(boxes: F.Column, max_boxes: int | None) -> F.Column:
 def _slim_verts_payload(kept: F.Column) -> F.Column:
     """array<struct<box, idx>> → array<struct<idx, cat, verts-flat24>>.
 
-    Vertices computed AFTER the cap: survivors only pay the trig.
-    The pair payload is SLIM — {idx, cat, verts}, not the full
-    15-field box struct: every field here is copied into ~n/2 pair
-    structs per box by the in-row comprehension, and the only box
-    field the distance task consumes post-explode is category
-    (guide §2.3 "project before the expensive operation", applied
-    in row space). box_vertices_flat_hof, not box_vertices: (a)
-    inside this interpreted transform lambda the flat unroll
-    re-evaluates its trig per coordinate (~290 SIN/COS per box;
-    the let-bound form computes 6), and (b) the flat 24-double
-    layout (one array header, one primitive buffer) beats nested
-    8×3 (nine headers) on allocation alone. Measured on the
-    11.9M-pair sf1 stage, min-of-4 interleaved (round 13): nested
-    full-box 14.0 → flat-verts full-box 11.2 → flat-verts slim
-    payload every-round faster (13.3→12.3 min through the full
-    task). Coordinates are the identical doubles (parity pinned
-    in test_geometry); the slim union is value-identical
-    (exceptAll symdiff 0 on all 118,830 sf0.01 rows).
+    Vertices are computed AFTER the cap, so only survivors pay the trig.
+    The payload is SLIM ({idx, cat, verts}, not the 15-field box struct):
+    it crosses to the Arrow pair kernel once per box, and category is
+    the only box field the distance task needs afterwards (guide §2.3,
+    project before the expensive operation). The vertices come from
+    :func:`geometry.box_vertices_flat_hof`, which inside this interpreted
+    transform lambda computes 6 trig values per box instead of ~290 and
+    yields the identical doubles :func:`geometry.box_vertices` does.
     """
     return F.transform(
         kept,
@@ -277,18 +267,16 @@ def _pairdist_arrow_batches(batches):
     per unordered box pair (i < j over array positions) carrying the min
     vertex-pair distance.
 
-    The arithmetic is EXACTLY :func:`geometry.min_vertex_distance_flat`
-    on the same JVM-computed vertex doubles (Arrow float64 transfer is
-    exact): dx*dx + dy*dy + dz*dz with the same left association per
-    term ((d*d).sum(axis=-1) reduces a length-3 axis sequentially), an
-    exact min over the 64 terms, one correctly-rounded sqrt — bit parity
-    pinned in test_pairdist_arrow_bit_parity. NULL handling mirrors
-    ``least``'s null-skip: a term touching a NULL coordinate becomes NaN
-    (Arrow nulls → NaN on to_numpy) and ``np.fmin.reduce`` skips NaNs
-    exactly as ``least`` skips NULLs; an all-NULL pair yields NaN where
-    the JVM kernel yields NULL — both rejected by the finite band
-    predicate every consumer applies (same adjudication as the codegen
-    kernel's NULL note).
+    The arithmetic is EXACTLY :func:`geometry.min_vertex_distance` (the
+    parity reference) on the same JVM-computed vertex doubles (Arrow
+    float64 transfer is exact): dx*dx + dy*dy + dz*dz with the same left
+    association per term ((d*d).sum(axis=-1) reduces a length-3 axis
+    sequentially), an exact min over the 64 terms, one correctly-rounded
+    sqrt. NULL handling mirrors ``least``'s null-skip: a term touching a
+    NULL coordinate becomes NaN (Arrow nulls → NaN on to_numpy) and
+    ``np.fmin.reduce`` skips NaNs exactly as ``least`` skips NULLs. A
+    pair with no finite term is emitted as NULL ``dist_m``, as the fold
+    gives for it.
 
     Pair enumeration is vectorized by grouping frames of equal box count
     (np.triu_indices per distinct n — a handful of distinct counts per
@@ -303,13 +291,11 @@ def _pairdist_arrow_batches(batches):
     # reused across chunks, batches and tasks (guide §4.5 module-global
     # + pid guard; this module is importable on the workers, so
     # cloudpickle ships the function by reference and the global
-    # survives worker reuse). Why this matters here: on the graded
-    # sandbox (a microVM), FIRST-TOUCH of fresh anonymous memory costs
-    # tens of ms per MB (measured: 512 MB single-process touch 36 s;
-    # 32 fresh processes' first ~100 MB numpy workload 53-73 s wall
-    # EACH, second run 0.2 s — round-14 ledger). Naively letting numpy
-    # allocate ~100 MB of temporaries per chunk re-pays that tax every
-    # task; 20 MB of once-per-worker buffers bounds it.
+    # survives worker reuse). On microVM hosts FIRST-TOUCH of fresh
+    # anonymous memory costs tens of ms per MB (measured: a 512 MB
+    # single-process touch took 36 s), so letting numpy allocate
+    # ~100 MB of temporaries per chunk would re-pay that tax every task;
+    # 20 MB of once-per-worker buffers bounds it.
     global _PAIRDIST_BUFS
     CHUNK = 8192
     pid = os.getpid()
@@ -369,8 +355,8 @@ def _pairdist_arrow_batches(batches):
             V = flat.reshape(total, 24)
         else:
             # a NULL verts array (box struct null upstream) pads as NaN:
-            # every term touching it goes NaN and fmin skips it — the
-            # least()-with-NULL-input behavior of the JVM kernels
+            # every term touching it goes NaN and fmin skips it, as
+            # least() skips NULL terms in the fold
             V = np.full((total, 24), np.nan)
             V[lens == 24] = flat.reshape(-1, 24)
         V = V.reshape(total, 8, 3)
@@ -429,7 +415,7 @@ def _pairdist_arrow_batches(batches):
                     pa.array(idx_np[b_idx[s:e]], pa.int32()),
                     cat_arr.take(pa_a),
                     cat_arr.take(pa_b),
-                    pa.array(dist, pa.float64()),
+                    pa.array(dist, pa.float64(), mask=np.isnan(dist)),
                 ],
                 schema=out_schema,
             )
@@ -442,25 +428,22 @@ def _box_pair_distances(
     to the Python worker as n boxes × (idx, cat, 24 vertex doubles) and
     come back as n(n−1)/2 slim pair rows — the guide-§8 shape (move the
     small representation, materialize the quadratic intermediate where
-    it is cheapest).
+    it is cheapest). This is the only pair-distance path of the program.
 
-    Why this exists next to `_box_pairs` + a JVM distance kernel
-    (round 14): every JVM shape measured over two rounds loses on one
-    axis — the interpreted HOF fold is stable but 3-4× off compiled
-    speed at sf1/sf10 (sf10 obj_obj 348s); the unrolled 64-term codegen
-    tree is fast ONLY when HotSpot is told to JIT >8000-byte methods,
-    a global flag that taxed every query in the session 2× (VERDICT
-    r13). This kernel is both: numpy's vectorized loops are compiled
-    code with no JIT threshold to fall over, and the JVM↔Python
-    transfer is per-BOX, not per-pair — the per-pair pandas_udf that
-    lost the round-7/round-13 A/Bs shipped 48 doubles per PAIR (4.6 GB
-    at sf1); this ships 24 per BOX (~0.3 GB) and returns ~50 B/pair.
+    Why a vectorized Python kernel and not a Column expression: Spark
+    does not codegen higher-order functions, so the fold
+    :func:`geometry.min_vertex_distance` runs its 64 lambda bodies
+    interpreted per pair, and an unrolled 64-term expression tree
+    compiles to a generated method too large for HotSpot to JIT by
+    default. numpy's loops are compiled code with neither limit, and the
+    JVM↔Python transfer is per BOX (24 doubles), not per pair; a pair
+    comes back as ~50 bytes.
 
     The vertex trig stays in the JVM (`_slim_verts_payload`), so the
-    doubles entering the distance are the identical doubles the JVM
-    kernels consume — bit parity with `min_vertex_distance_flat` is
-    pinned per-value in tests, and full-output parity vs the row-space
-    path was verified exceptAll-symdiff-0 at sf0.01/sf0.1 (round 14).
+    doubles entering the distance are the doubles
+    :func:`geometry.box_vertices` yields. On them the output equals
+    :func:`_box_pairs` + :func:`geometry.min_vertex_distance` row for
+    row, bit for bit (tests/test_pairdist_arrow.py).
     """
     kept = _capped_boxes(F.col("bounding_boxes_3d"), max_boxes)
     inp = (
@@ -480,11 +463,7 @@ def _box_pair_distances(
     return inp.mapInArrow(_pairdist_arrow_batches, _PAIRDIST_SCHEMA)
 
 
-def _box_pairs(
-    frames: DataFrame,
-    with_verts: bool = False,
-    max_boxes: int | None = None,
-) -> DataFrame:
+def _box_pairs(frames: DataFrame, max_boxes: int | None = None) -> DataFrame:
     """J8: all unordered in-frame box pairs (i < j).
 
     The reference iterates box pairs inside one frame's record
@@ -493,10 +472,6 @@ def _box_pairs(
     comprehension + one explode — no self-join, no shuffle at all. (The
     equi-join formulation — see plans/star_queries.py j8_pairwise_selfjoin
     — is the right shape when instances arrive as a flat table instead.)
-
-    ``with_verts`` precomputes the 8 oriented vertices once per BOX before
-    pairing; downstream 8×8 distance kernels would otherwise re-run the
-    trig once per PAIR (each box sits in ~n/2 pairs).
 
     ``max_boxes`` — per-frame pair bound (SURVEY §7.3 hard-parts list;
     VERDICT r12 #2): the in-row comprehension materializes all n(n−1)/2
@@ -512,12 +487,8 @@ def _box_pairs(
     the output is row-identical to the unbounded path (the default,
     None, which is exact reference parity).
     """
-    boxes = F.col("bounding_boxes_3d")
-    kept = _capped_boxes(boxes, max_boxes)
-    if with_verts:
-        enriched = _slim_verts_payload(kept)
-    else:
-        enriched = kept
+    kept = _capped_boxes(F.col("bounding_boxes_3d"), max_boxes)
+
     def mk_pairs(bv: F.Column) -> F.Column:
         n = F.size(bv)
         pair = lambda i, j: F.struct(  # noqa: E731
@@ -536,17 +507,15 @@ def _box_pairs(
         )
         return F.when(n >= 2, all_pairs).otherwise(F.array())
 
-    from ..functions.text import let
-
     pairs = frames.select(
         "dataset",
         "image_id",
         "scene_id",
         "frame_id",
         "camera",
-        F.explode(let(enriched, mk_pairs)).alias("p"),
+        F.explode(let(kept, mk_pairs)).alias("p"),
     )
-    cols = [
+    return pairs.select(
         "dataset",
         "image_id",
         "scene_id",
@@ -554,21 +523,9 @@ def _box_pairs(
         "camera",
         F.col("p.pos_a").alias("pos_a"),
         F.col("p.pos_b").alias("pos_b"),
-    ]
-    if with_verts:
-        # slim payload (see above): categories + flat verts, no box structs
-        cols += [
-            F.col("p.a.cat").alias("cat_a"),
-            F.col("p.b.cat").alias("cat_b"),
-            F.col("p.a.verts").alias("verts_a"),
-            F.col("p.b.verts").alias("verts_b"),
-        ]
-    else:
-        cols += [
-            F.col("p.a.box").alias("box_a"),
-            F.col("p.b.box").alias("box_b"),
-        ]
-    return pairs.select(*cols)
+        F.col("p.a.box").alias("box_a"),
+        F.col("p.b.box").alias("box_b"),
+    )
 
 
 def obj_obj_distance(
@@ -576,6 +533,8 @@ def obj_obj_distance(
 ) -> DataFrame:
     """Min vertex-pair distance per in-frame pair, 0.2–20 m, 1 decimal
     (tasks_3d/obj_obj_distance_qa.py:52-92, geometry.py:98-118).
+    Distances come from :func:`_box_pair_distances`, whose parity
+    reference is :func:`geometry.min_vertex_distance`.
     ``max_boxes`` bounds the per-frame pair expansion (see _box_pairs);
     default None = exact reference parity.
 
@@ -589,29 +548,7 @@ def obj_obj_distance(
     3.35 tie computed as 3.3500000000000005 by DuckDB rounds to 3.4
     where the JVM value rounds to 3.3)."""
     band = F.round(F.col("dist_m"), 6)
-    # Kernel selection (round 14). Default: the per-frame Arrow kernel
-    # (_box_pair_distances) — the only shape measured fast at sf1/sf10
-    # AND stable under a cold JVM. The round-13 unrolled codegen tree
-    # (min_vertex_distance_flat) is steady-state-fastest but emits
-    # >8000-bytecode generated methods HotSpot refuses to JIT, and the
-    # -XX:-DontCompileHugeMethods rescue taxed the whole suite 2×
-    # (VERDICT r13); the HOF fold is stable but interpreted (sf10
-    # obj_obj 348s). All three are value-identical on these pairs
-    # (parity pinned in test_geometry / test_qa_tasks). The env knob is
-    # the deployment escape hatch for Python-less clusters.
-    kernel = os.environ.get("SPARK_GRAFT_OBJOBJ_KERNEL", "arrow")
-    if kernel == "arrow":
-        dists = _box_pair_distances(frames, max_boxes=max_boxes)
-    else:
-        pairs = _box_pairs(frames, with_verts=True, max_boxes=max_boxes)
-        kern = (
-            G.min_vertex_distance_flat
-            if kernel == "flat"
-            else G.min_vertex_distance_flat_fold
-        )
-        dists = pairs.withColumn(
-            "dist_m", kern(F.col("verts_a"), F.col("verts_b"))
-        )
+    dists = _box_pair_distances(frames, max_boxes=max_boxes)
     d = (
         dists.filter(
             (band >= P_OBJ["min_distance"]) & (band <= P_OBJ["max_distance"])

@@ -17,21 +17,6 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-# Extra JVM options for the driver/executor JVMs. EMPTY by default
-# (round 14): round 13 shipped `-XX:-DontCompileHugeMethods
-# -XX:ReservedCodeCacheSize=512m` to rescue a 64-term generated kernel
-# whose whole-stage-codegen method exceeded HotSpot's huge-method JIT
-# limit — and under the driver's cold-JVM protocol the C2 compiler then
-# chewed on ~590 KB of giant generated methods for the whole suite's
-# duration: warmup 33.7→64.5 s, 18 of 19 bench queries 2× slower,
-# queries with zero code change included (VERDICT r13). The fix is in
-# the KERNEL now (the obj_obj pair stage computes distances in a
-# vectorized Arrow kernel; no generated method goes near the 8000-byte
-# JIT limit), so no JVM that runs this engine's generated code needs
-# special flags. The env knob remains for deployments that want to pass
-# their own options (GC sizing etc.); it replaces, not appends.
-JVM_CODEGEN_OPTS = os.environ.get("SPARK_GRAFT_JVM_OPTS", "")
-
 # Allocator policy for Python workers (and, harmlessly, every process
 # we spawn). Round-14 measurement on the graded sandbox (a microVM):
 # FIRST-TOUCH of fresh anonymous memory costs tens of ms per MB (512 MB
@@ -107,13 +92,6 @@ def get_spark(
     )
     for k in WORKER_ALLOC_ENV:
         builder = builder.config(f"spark.executorEnv.{k}", os.environ[k])
-    if JVM_CODEGEN_OPTS.strip():
-        # deployment-supplied options only; no flags ship by default
-        # (round 14 — see JVM_CODEGEN_OPTS above). Launch-time only:
-        # a pre-existing JVM (getOrCreate reuse) will not pick these up.
-        builder = builder.config(
-            "spark.driver.extraJavaOptions", JVM_CODEGEN_OPTS
-        ).config("spark.executor.extraJavaOptions", JVM_CODEGEN_OPTS)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
